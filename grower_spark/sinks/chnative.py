@@ -1,4 +1,5 @@
-"""ClickHouse NATIVE TCP protocol client — pure stdlib, no packages.
+"""ClickHouse NATIVE TCP protocol client — stdlib sockets plus numpy and
+pyarrow (Spark's own Arrow dependencies), no ClickHouse driver package.
 
 The reference loads ClickHouse over the native protocol via
 clickhouse-go (`cmd/filelog/main.go:181-183`, `internal/repositories/
@@ -34,7 +35,22 @@ sends one Data block per chunk -> an EMPTY Data block ends the insert ->
 server sends EndOfStream.  Because the server names the types, the
 client needs no type hints — same `insert(table, rows, column_names)`
 signature as the HTTP client, so `ClickHouseSink` takes either via
-`client_factory`.
+`client_factory`; `insert_arrow(table, arrow_table)` (clickhouse_connect's
+name) takes Arrow data, which is what the sink hands it.
+
+Column codec: ONE columnar encoder, `encode_column(type, pyarrow.Array)`,
+writes each block column from Arrow buffers with numpy — fixed-width
+types by `astype(...).tobytes()` after a range check (values the wire
+type cannot hold raise, as `struct.pack` did, instead of wrapping);
+`Date` from `date32` days, `DateTime` from UTC timestamp buffers (so the
+worker's local timezone never enters), `UInt64` from the caster's
+`decimal(20,0)` words, exact up to 2**64-1; `String` as LEB128 length
+prefixes computed as a vector from the offsets buffer with the data bytes
+scattered around them; `Nullable(T)` as a null-mask in front of the inner
+column.  Python lists (`insert(rows)`, `encode_block` on lists) go
+through `_to_arrow` into the same encoder.  `decode_column` stays
+per-value Python — it serves the fake servers and SELECT readback, not
+the insert path.
 
 Compression (r12 verdict item 8): `compression="lz4"` negotiates
 compression on the Query packet and moves every Data-block body (both
@@ -54,10 +70,16 @@ compression=off; compressed HTTP bodies stay available on the HTTP path
 
 from __future__ import annotations
 
+import datetime as _dt
+import functools
+import select
 import socket
 import struct
 from dataclasses import dataclass
 from typing import Optional, Sequence
+
+import numpy as np
+import pyarrow as pa
 
 # --- client/server packet codes (public protocol constants) ---
 CLIENT_HELLO = 0
@@ -214,13 +236,17 @@ class Reader:
 # --------------------------------------------------------------------------
 
 
-def _lz4_raw():
-    # LZ4 *block* format (what native frames carry) via pyarrow's parquet
-    # codec; the HTTP path's `Codec("lz4")` is the *frame* format and is
-    # NOT wire-compatible here
-    import pyarrow
+# LZ4 *block* format (what native frames carry) is pyarrow's parquet
+# codec "lz4_raw"; the HTTP path's `Codec("lz4")` is the *frame* format
+# and is NOT wire-compatible here
+_METHOD_CODEC = {METHOD_LZ4: "lz4_raw", METHOD_ZSTD: "zstd"}
 
-    return pyarrow.Codec("lz4_raw")
+
+@functools.lru_cache(maxsize=None)
+def _codec(name: str) -> pa.Codec:
+    """One pyarrow codec per name and process, shared by every frame
+    written and read."""
+    return pa.Codec(name)
 
 
 def compress_frame(data: bytes, method: int = METHOD_LZ4) -> bytes:
@@ -230,12 +256,8 @@ def compress_frame(data: bytes, method: int = METHOD_LZ4) -> bytes:
     header bytes, matching the server's accounting."""
     from .cityhash102 import cityhash128
 
-    if method == METHOD_LZ4:
-        body = _lz4_raw().compress(data, asbytes=True)
-    elif method == METHOD_ZSTD:
-        import pyarrow
-
-        body = pyarrow.Codec("zstd").compress(data, asbytes=True)
+    if method in _METHOD_CODEC:
+        body = _codec(_METHOD_CODEC[method]).compress(data, asbytes=True)
     elif method == METHOD_NONE:
         body = data
     else:
@@ -280,12 +302,8 @@ def read_frame(r: Reader) -> bytes:
             "compressed-frame checksum mismatch "
             f"(method {method:#x}, {comp_size} bytes)"
         )
-    if method == METHOD_LZ4:
-        out = _lz4_raw().decompress(body, data_size, asbytes=True)
-    elif method == METHOD_ZSTD:
-        import pyarrow
-
-        out = pyarrow.Codec("zstd").decompress(body, data_size, asbytes=True)
+    if method in _METHOD_CODEC:
+        out = _codec(_METHOD_CODEC[method]).decompress(body, data_size, asbytes=True)
     elif method == METHOD_NONE:
         out = body
     else:
@@ -320,7 +338,7 @@ class CompressedBlockReader(Reader):
 
 # --------------------------------------------------------------------------
 # column codecs (the sink's DDL surface: spark_to_clickhouse_type output
-# plus Nullable) — encode rows column-wise into native block layout
+# plus Nullable) — one columnar encoder over pyarrow Arrays
 # --------------------------------------------------------------------------
 
 _FIXED_FMT = {
@@ -331,6 +349,15 @@ _FIXED_FMT = {
     "DateTime": "<I",    # seconds since epoch
 }
 
+# integral wire types: (min, max, numpy dtype)
+_INT_RANGE = {
+    t: (np.iinfo(f).min, np.iinfo(f).max, np.dtype(f))
+    for t, f in _FIXED_FMT.items() if not t.startswith("Float")
+}
+
+# seconds per Arrow timestamp unit
+_TS_DIVISOR = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}
+
 
 def _fixed_string_n(t: str) -> Optional[int]:
     if t.startswith("FixedString(") and t.endswith(")"):
@@ -338,54 +365,254 @@ def _fixed_string_n(t: str) -> Optional[int]:
     return None
 
 
-def _encode_value(t: str, v) -> bytes:
-    if t == "String":
-        return write_string("" if v is None else
-                            (v if isinstance(v, (str, bytes)) else str(v)))
-    n = _fixed_string_n(t)
-    if n is not None:
-        b = (v or "").encode("utf-8") if not isinstance(v, bytes) else v
-        if len(b) > n:
-            # A real server rejects oversize FixedString inserts ("Too
-            # large value for FixedString(N)") and the HTTP path would
-            # surface that error — silently truncating here would store
-            # corrupted data instead.  NB the caster's FixedString plan
-            # truncates to N CHARACTERS; multi-byte UTF-8 can still
-            # exceed N BYTES, which is exactly the case that must fail
-            # loudly rather than ship a mangled code point.
-            raise ProtocolError(
-                f"value of {len(b)} bytes too large for {t} "
-                f"(ClickHouse would reject this insert): {b[:32]!r}..."
-            )
-        return b.ljust(n, b"\x00")
-    fmt = _FIXED_FMT.get(t)
-    if fmt is None:
-        raise ProtocolError(f"unsupported ClickHouse column type {t!r}")
-    if v is None:
-        v = 0  # Nullable writes a default under the null mask
-    if t == "DateTime" and hasattr(v, "timestamp"):
+def _nullable_inner(t: str) -> Optional[str]:
+    if t.startswith("Nullable(") and t.endswith(")"):
+        return t[len("Nullable("):-1]
+    return None
+
+
+def _valid_mask(arr: pa.Array) -> Optional[np.ndarray]:
+    """Boolean validity per slot, or None when the array has no NULLs.
+    Read from the bitmap buffer directly (``is_null().to_numpy()`` would
+    import pandas into every executor worker)."""
+    if arr.null_count == 0:
+        return None
+    bitmap = arr.buffers()[0]
+    if bitmap is None:  # NullArray: no buffers, every slot NULL
+        return np.zeros(len(arr), dtype=bool)
+    lo = arr.offset // 8
+    bits = np.unpackbits(
+        np.frombuffer(bitmap, np.uint8)[lo:(arr.offset + len(arr) + 7) // 8],
+        bitorder="little",
+    )
+    start = arr.offset - 8 * lo
+    return bits[start:start + len(arr)].astype(bool)
+
+
+def _values(arr: pa.Array) -> np.ndarray:
+    """The fixed-width data buffer of ``arr`` as numpy, NULL slots zeroed
+    (their bytes are undefined in Arrow).  A ``decimal(p, 0)`` comes back
+    as uint64, exact over [0, 2**64-1]."""
+    t = arr.type
+    n = len(arr)
+    if pa.types.is_null(t):
+        return np.zeros(n, np.int64)
+    data = arr.buffers()[1]
+    if pa.types.is_boolean(t):
+        bits = np.unpackbits(np.frombuffer(data, np.uint8), bitorder="little")
+        vals = bits[arr.offset:arr.offset + n]
+    elif pa.types.is_decimal128(t):
+        # the caster's UInt64 column: 16-byte little-endian two's
+        # complement words whose high half is 0 for every value in
+        # [0, 2**64-1]
+        if t.scale != 0:
+            raise ProtocolError(f"cannot encode {t} as an integer column")
+        words = np.frombuffer(data, "<u8")[2 * arr.offset:2 * (arr.offset + n)]
+        low, high = words[0::2], words[1::2]
+        valid = _valid_mask(arr)
+        if valid is not None:
+            low, high = np.where(valid, low, 0), np.where(valid, high, 0)
+        if high.any():
+            raise ProtocolError(f"{t} value outside [0, 2**64-1]")
+        return low
+    elif pa.types.is_timestamp(t) or pa.types.is_date(t):
+        vals = np.frombuffer(data, f"<i{t.bit_width // 8}")[arr.offset:arr.offset + n]
+    elif pa.types.is_integer(t):
+        kind = "i" if pa.types.is_signed_integer(t) else "u"
+        vals = np.frombuffer(data, f"<{kind}{t.bit_width // 8}")[arr.offset:arr.offset + n]
+    elif pa.types.is_floating(t):
+        vals = np.frombuffer(data, f"<f{t.bit_width // 8}")[arr.offset:arr.offset + n]
+    else:
+        raise ProtocolError(f"cannot encode Arrow {t} as a numeric column")
+    valid = _valid_mask(arr)
+    return vals if valid is None else np.where(valid, vals, 0)
+
+
+def _integral(type_name: str, arr: pa.Array) -> np.ndarray:
+    """Integer values for an integral wire type: epoch seconds for
+    ``DateTime`` (UTC; truncated toward zero like ``int(ts.timestamp())``),
+    days for ``Date``, ``int()``-style truncation for floats."""
+    t = arr.type
+    vals = _values(arr)
+    if pa.types.is_timestamp(t) or pa.types.is_date(t):
+        if type_name == "DateTime" and pa.types.is_timestamp(t):
+            div = _TS_DIVISOR[t.unit]
+            return np.where(vals < 0, -(-vals // div), vals // div)
+        if type_name == "Date" and pa.types.is_date32(t):
+            return vals
+        raise ProtocolError(f"cannot encode Arrow {t} as {type_name}")
+    if pa.types.is_floating(t):
+        if not np.isfinite(vals).all():
+            raise ProtocolError(f"non-finite value for {type_name}")
+        lo, hi, _ = _INT_RANGE[type_name]
+        vals = np.trunc(vals)
+        if len(vals) and (vals.min() < lo or vals.max() >= hi + 1):
+            raise ProtocolError(f"value out of range for {type_name}")
+        return vals.astype(np.int64 if lo < 0 else np.uint64)
+    return vals
+
+
+def _string_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(byte length per slot, concatenated bytes) of a string-like array;
+    NULL slots count as empty."""
+    t = arr.type
+    if not (pa.types.is_string(t) or pa.types.is_binary(t)
+            or pa.types.is_large_string(t) or pa.types.is_large_binary(t)):
+        arr = arr.cast(pa.large_string())
+        t = arr.type
+    n = len(arr)
+    if n == 0:
+        return np.zeros(0, np.int64), np.zeros(0, np.uint8)
+    _, offsets, data = arr.buffers()
+    wide = pa.types.is_large_string(t) or pa.types.is_large_binary(t)
+    offsets = np.frombuffer(offsets, "<i8" if wide else "<i4")[arr.offset:arr.offset + n + 1]
+    lengths = np.diff(offsets).astype(np.int64)
+    data = (np.frombuffer(data, np.uint8)[offsets[0]:offsets[-1]]
+            if data is not None else np.zeros(0, np.uint8))
+    valid = _valid_mask(arr)
+    if valid is not None:
+        data = data[np.repeat(valid, lengths)]
+        lengths = np.where(valid, lengths, 0)
+    return lengths, data
+
+
+def _encode_strings(arr: pa.Array) -> bytes:
+    """``String``: each value as a LEB128 length then its bytes.  The
+    prefixes are computed as a vector from the offsets, and the data bytes
+    fill every slot that is not a prefix byte, in order."""
+    lengths, data = _string_parts(arr)
+    if not len(lengths):
+        return b""
+    width = np.ones(len(lengths), np.int64)  # prefix bytes per value
+    k = 1
+    while (more := lengths >= 1 << 7 * k).any():
+        width += more
+        k += 1
+    span = width + lengths
+    starts = np.cumsum(span) - span
+    out = np.empty(int(span.sum()), np.uint8)
+    is_prefix = np.zeros(len(out), bool)
+    for k in range(int(width.max())):
+        sel = width > k
+        pos = starts[sel] + k
+        byte = (lengths[sel] >> 7 * k) & 0x7F
+        out[pos] = np.where(width[sel] > k + 1, byte | 0x80, byte)
+        is_prefix[pos] = True
+    out[~is_prefix] = data
+    return out.tobytes()
+
+
+def _encode_fixed_strings(arr: pa.Array, n: int, type_name: str) -> bytes:
+    """``FixedString(N)``: each value zero-padded to N bytes."""
+    lengths, data = _string_parts(arr)
+    over = np.flatnonzero(lengths > n)
+    if len(over):
+        # A real server rejects oversize FixedString inserts ("Too large
+        # value for FixedString(N)") and the HTTP path would surface that
+        # error — silently truncating here would store corrupted data
+        # instead.  NB the caster's FixedString plan truncates to N
+        # CHARACTERS; multi-byte UTF-8 can still exceed N BYTES, which is
+        # exactly the case that must fail loudly rather than ship a
+        # mangled code point.
+        i = over[0]
+        start = int(lengths[:i].sum())
+        b = data[start:start + int(lengths[i])].tobytes()
+        raise ProtocolError(
+            f"value of {len(b)} bytes too large for {type_name} "
+            f"(ClickHouse would reject this insert): {b[:32]!r}..."
+        )
+    out = np.zeros((len(lengths), n), np.uint8)
+    out[np.arange(n) < lengths[:, None]] = data
+    return out.tobytes()
+
+
+def _encode_fixed(type_name: str, arr: pa.Array) -> bytes:
+    """Fixed-width numbers, ``Date`` and ``DateTime`` via numpy casts,
+    refusing values the wire type cannot hold (as ``struct.pack`` would)
+    rather than wrapping them."""
+    if type_name in ("Float32", "Float64"):
+        src = _values(arr).astype(np.float64)
+        with np.errstate(over="ignore"):  # overflow is checked below
+            out = src.astype("<f4" if type_name == "Float32" else "<f8")
+        if type_name == "Float32" and (np.isinf(out) & ~np.isinf(src)).any():
+            raise ProtocolError("finite value too large for Float32")
+        return out.tobytes()
+    lo, hi, dtype = _INT_RANGE[type_name]
+    vals = _integral(type_name, arr)
+    if len(vals) and (int(vals.min()) < lo or int(vals.max()) > hi):
+        raise ProtocolError(
+            f"value out of range for {type_name} ([{lo}, {hi}]): "
+            f"{int(vals.min())}..{int(vals.max())}"
+        )
+    return vals.astype(dtype).tobytes()
+
+
+def _py_int(type_name: str, v) -> int:
+    if type_name == "DateTime" and hasattr(v, "timestamp"):
         if getattr(v, "tzinfo", None) is None:
-            # Spark collects session-tz-naive datetimes and this repo's
-            # sessions run UTC — a naive .timestamp() would silently
-            # apply the PROCESS timezone instead
-            import datetime as _dt
-
+            # naive datetimes are UTC wall time (this repo's sessions run
+            # UTC) — a naive .timestamp() would apply the PROCESS timezone
             v = v.replace(tzinfo=_dt.timezone.utc)
-        v = int(v.timestamp())
-    if t == "Date" and hasattr(v, "toordinal"):
-        v = v.toordinal() - 719163  # days since 1970-01-01
-    if t.startswith(("UInt", "Int", "Date")):
-        v = int(v)
-    return struct.pack(fmt, v)
+        return int(v.timestamp())
+    if type_name == "Date" and hasattr(v, "toordinal"):
+        return v.toordinal() - 719163  # days since 1970-01-01
+    return int(v)
 
 
-def encode_column(type_name: str, values: Sequence) -> bytes:
-    """Column-wise native encoding; recursive for Nullable(T)."""
-    if type_name.startswith("Nullable(") and type_name.endswith(")"):
-        inner = type_name[len("Nullable("):-1]
-        mask = bytes(1 if v is None else 0 for v in values)
-        return mask + encode_column(inner, values)
-    return b"".join(_encode_value(type_name, v) for v in values)
+def _to_arrow(type_name: str, values: Sequence) -> pa.Array:
+    """Python values -> an Arrow array ``encode_column`` accepts: binary
+    for strings (``str()`` of anything else), float64 for floats, int64 or
+    uint64 for integral types (DateTime as epoch seconds, Date as days).
+    ``None`` becomes NULL.  Built from numpy buffers, so no pandas import."""
+    inner = _nullable_inner(type_name) or type_name
+    n = len(values)
+    valid = np.fromiter((v is not None for v in values), bool, n)
+    bitmap = None if valid.all() else pa.py_buffer(np.packbits(valid, bitorder="little"))
+    if inner == "String" or _fixed_string_n(inner) is not None:
+        parts = [b"" if v is None else v if isinstance(v, bytes)
+                 else (v if isinstance(v, str) else str(v)).encode("utf-8")
+                 for v in values]
+        offsets = np.zeros(n + 1, np.int64)
+        np.cumsum(np.fromiter(map(len, parts), np.int64, n), out=offsets[1:])
+        return pa.Array.from_buffers(
+            pa.large_binary(), n,
+            [bitmap, pa.py_buffer(offsets), pa.py_buffer(b"".join(parts))])
+    if inner in ("Float32", "Float64"):
+        data = np.array([0.0 if v is None else float(v) for v in values], np.float64)
+        return pa.Array.from_buffers(pa.float64(), n, [bitmap, pa.py_buffer(data)])
+    if inner not in _INT_RANGE:
+        raise ProtocolError(f"unsupported ClickHouse column type {type_name!r}")
+    ints = [0 if v is None else _py_int(inner, v) for v in values]
+    lo, hi, _ = _INT_RANGE[inner]
+    if ints and (min(ints) < lo or max(ints) > hi):
+        raise ProtocolError(f"value out of range for {inner} ([{lo}, {hi}])")
+    wide = (np.uint64, pa.uint64()) if hi > 2**63 - 1 else (np.int64, pa.int64())
+    return pa.Array.from_buffers(
+        wide[1], n, [bitmap, pa.py_buffer(np.array(ints, wide[0]))])
+
+
+def encode_column(type_name: str, values: "pa.Array | Sequence") -> bytes:
+    """Native encoding of one column.  ``values`` is a pyarrow Array (the
+    sink's path) or a Python sequence, which goes through ``_to_arrow``
+    first.  ``Nullable(T)`` is a null-mask byte per row in front of the
+    inner column, whose NULL slots carry T's zero value; a NULL in a
+    non-Nullable column encodes as the zero value too."""
+    if not isinstance(values, pa.Array):
+        values = _to_arrow(type_name, values)
+    inner = _nullable_inner(type_name)
+    if inner is not None:
+        valid = _valid_mask(values)
+        mask = (np.zeros(len(values), np.uint8) if valid is None
+                else (~valid).astype(np.uint8))
+        return mask.tobytes() + encode_column(inner, values)
+    if type_name == "String":
+        return _encode_strings(values)
+    n = _fixed_string_n(type_name)
+    if n is not None:
+        return _encode_fixed_strings(values, n, type_name)
+    if type_name not in _FIXED_FMT:
+        raise ProtocolError(f"unsupported ClickHouse column type {type_name!r}")
+    return _encode_fixed(type_name, values)
 
 
 def decode_column(type_name: str, n_rows: int, r: Reader) -> list:
@@ -481,7 +708,10 @@ class ServerInfo:
 class NativeClickHouseClient:
     """Native-TCP twin of ``HttpClickHouseClient`` — same duck-typed
     surface (``insert(table, rows, column_names)`` + ``command(sql)``),
-    so ``ClickHouseSink`` takes either through ``client_factory``.
+    so ``ClickHouseSink`` takes either through ``client_factory``.  It
+    also has clickhouse_connect's ``insert_arrow(table, arrow_table)``,
+    which the sink prefers: Arrow columns encode without a Python value
+    per cell.
 
     Connects lazily on first use; ``insert_chunk_rows`` bounds the rows
     per Data block (the server streams blocks, so chunking is free and
@@ -501,14 +731,9 @@ class NativeClickHouseClient:
     ) -> None:
         if compression in (False, None, ""):
             self._method: Optional[int] = None
-        elif compression == "lz4":
-            _lz4_raw()  # fail at construction, not first insert
-            self._method = METHOD_LZ4
-        elif compression == "zstd":
-            import pyarrow
-
-            pyarrow.Codec("zstd")  # fail at construction
-            self._method = METHOD_ZSTD
+        elif compression in ("lz4", "zstd"):
+            self._method = METHOD_LZ4 if compression == "lz4" else METHOD_ZSTD
+            _codec(_METHOD_CODEC[self._method])  # fail at construction
         elif compression == "none":
             # checksummed frames without compression — the protocol's
             # method 0x02, useful to isolate checksum behavior
@@ -785,9 +1010,11 @@ class NativeClickHouseClient:
 
     def insert(self, table: str, rows: Sequence[tuple],
                column_names: Sequence[str]) -> None:
-        """Native insert: the server's sample block names the column
-        types, so the wire layout is authoritative — no client-side type
-        hints (same signature as the HTTP client).
+        """Native insert of Python rows: the server's sample block names
+        the column types, so the wire layout is authoritative — no
+        client-side type hints (same signature as the HTTP client).  Each
+        chunk's columns go through ``_to_arrow`` into the same encoder
+        ``insert_arrow`` uses.
 
         Error discipline differs from command()/query() here: a server
         Exception that arrives MID-INSERT (after the Query packet,
@@ -797,58 +1024,73 @@ class NativeClickHouseClient:
         closes the connection and the sink's retry reconnects cleanly.
         The keep-connection-after-Exception invariant only holds at
         clean packet boundaries (DDL, ping, SELECT)."""
+        step = self.insert_chunk_rows
+        chunks = (
+            [[row[i] for row in rows[lo:lo + step]]
+             for i in range(len(column_names))]
+            for lo in range(0, len(rows), step)
+        )
+        self._insert(table, list(column_names), chunks)
+
+    def insert_arrow(self, table: str, arrow_table: "pa.Table | pa.RecordBatch") -> None:
+        """Native insert of an Arrow table (or record batch), named and
+        ordered like clickhouse_connect's ``Client.insert_arrow``: the
+        column names are the table's, and each column is encoded straight
+        from its Arrow buffers.  Same error discipline as ``insert``."""
+        if isinstance(arrow_table, pa.RecordBatch):
+            arrow_table = pa.Table.from_batches([arrow_table])
+        chunks = (
+            batch.columns
+            for batch in arrow_table.to_batches(max_chunksize=self.insert_chunk_rows)
+        )
+        self._insert(table, arrow_table.column_names, chunks)
+
+    def _insert(self, table: str, column_names: list[str], chunks) -> None:
+        """Run one INSERT whose Data blocks are ``chunks``: per block, one
+        sequence of values (Arrow or Python) per column in
+        ``column_names`` order."""
         try:
-            self._insert(table, rows, column_names)
+            self.connect()
+            cols = ", ".join(f"`{c}`" for c in column_names)
+            self._write_query_packet(f"INSERT INTO {table} ({cols}) VALUES")
+            assert self._reader is not None
+            # the sample block describes the insert structure
+            sample: Optional[list] = None
+            while sample is None:
+                code, payload = self._read_packet(self._reader)
+                if code == SERVER_DATA:
+                    sample = payload  # type: ignore[assignment]
+                elif code == SERVER_END_OF_STREAM:
+                    raise ProtocolError(
+                        "server ended stream before sending the insert's "
+                        "sample block"
+                    )
+            types = {name: t for name, t, _ in sample}
+            missing = [c for c in column_names if c not in types]
+            if missing:
+                raise ProtocolError(
+                    f"server sample block lacks insert columns {missing}; "
+                    f"has {sorted(types)}"
+                )
+            for values in chunks:
+                # A server that raises mid-insert (quota, oversize value,
+                # read-only table) sends an Exception packet and stops
+                # reading; blindly sendall-ing every remaining chunk would
+                # then block until the socket timeout instead of surfacing
+                # the error.  A zero-timeout poll between chunks drains
+                # any pending packet first — _read_packet raises on
+                # Exception.
+                while (self._reader.pending()
+                       or select.select([self._sock], [], [], 0)[0]):
+                    self._read_packet(self._reader)
+                self._write_data_block(
+                    [(c, types[c], v) for c, v in zip(column_names, values)]
+                )
+            self._write_data_block([])  # end of insert
+            while True:
+                code, _ = self._read_packet(self._reader)
+                if code == SERVER_END_OF_STREAM:
+                    return
         except Exception:
             self.close()
             raise
-
-    def _insert(self, table: str, rows: Sequence[tuple],
-                column_names: Sequence[str]) -> None:
-        self.connect()
-        cols = ", ".join(f"`{c}`" for c in column_names)
-        self._write_query_packet(
-            f"INSERT INTO {table} ({cols}) VALUES"
-        )
-        assert self._reader is not None
-        # the sample block describes the insert structure
-        sample: Optional[list] = None
-        while sample is None:
-            code, payload = self._read_packet(self._reader)
-            if code == SERVER_DATA:
-                sample = payload  # type: ignore[assignment]
-            elif code == SERVER_END_OF_STREAM:
-                raise ProtocolError(
-                    "server ended stream before sending the insert's "
-                    "sample block"
-                )
-        types = {name: t for name, t, _ in sample}
-        missing = [c for c in column_names if c not in types]
-        if missing:
-            raise ProtocolError(
-                f"server sample block lacks insert columns {missing}; "
-                f"has {sorted(types)}"
-            )
-        for lo in range(0, len(rows), self.insert_chunk_rows):
-            # A server that raises mid-insert (quota, oversize value,
-            # read-only table) sends an Exception packet and stops
-            # reading; blindly sendall-ing every remaining chunk would
-            # then block until the socket timeout instead of surfacing
-            # the error.  A zero-timeout poll between chunks drains any
-            # pending packet first — _read_packet raises on Exception.
-            import select as _select
-
-            while (self._reader.pending()
-                   or _select.select([self._sock], [], [], 0)[0]):
-                self._read_packet(self._reader)
-            chunk = rows[lo:lo + self.insert_chunk_rows]
-            block = [
-                (c, types[c], [row[i] for row in chunk])
-                for i, c in enumerate(column_names)
-            ]
-            self._write_data_block(block)
-        self._write_data_block([])  # end of insert
-        while True:
-            code, _ = self._read_packet(self._reader)
-            if code == SERVER_END_OF_STREAM:
-                return

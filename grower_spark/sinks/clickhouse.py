@@ -12,18 +12,30 @@ insert function that writes per-partition with app-level retry.  Unlike
 the reference's in-memory buffer (data loss on crash, SURVEY.md §4.2),
 checkpointing + a replayable source upgrades delivery to at-least-once.
 
-The client is injectable — anything with ``insert(table, rows,
-column_names)`` works — and two real options ship here:
+The batch stays columnar on its way out: ``mapInArrow`` hands each
+partition to the executor's Python worker as Arrow record batches (no
+pickled ``Row`` per line), and the sink slices them into ``insert_chunk``
+-row Arrow tables.  The client is injectable through ``client_factory``
+and speaks one of two protocols:
 
+- ``insert_arrow(table, arrow_table)`` (clickhouse_connect's name and
+  argument order), preferred when present — the chunk goes as Arrow;
+- ``insert(table, rows, column_names)`` otherwise, with ``rows`` a list
+  of tuples in ``columns`` order built column by column from the chunk.
+
+Three clients ship or plug in:
+
+- ``NativeClickHouseClient`` (``sinks/chnative.py``): the native TCP
+  protocol with LZ4/ZSTD frames, stdlib sockets plus numpy/pyarrow; has
+  ``insert_arrow`` and encodes Arrow columns without a Python value per
+  cell — the production path;
 - ``HttpClickHouseClient`` (this module): stdlib-only client speaking
   ClickHouse's public HTTP interface (``POST /?query=INSERT ... FORMAT
   TabSeparated`` with TSV body, settings as URL params, credentials via
   ``X-ClickHouse-User``/``Key`` headers) — zero dependencies, testable
-  against an in-process fake server, and a legitimate production path
-  (the HTTP interface is ClickHouse's canonical second protocol).
+  against an in-process fake server; rows protocol;
 - a ``clickhouse_connect`` client (absent in this container): pass its
-  factory for native-protocol + LZ4, matching the reference's
-  clickhouse-go wiring.
+  factory; its ``insert_arrow`` is used.
 """
 
 from __future__ import annotations
@@ -43,15 +55,19 @@ def _tsv_value(v) -> str:
     """One value in ClickHouse TabSeparated encoding.
 
     Escaping per the TSV format spec: backslash, tab, newline, CR; NULL is
-    ``\\N``; DateTime as ``YYYY-MM-DD hh:mm:ss`` (server-local seconds —
-    ClickHouse DateTime carries no sub-second), Date as ``YYYY-MM-DD``;
-    bools as 1/0 (UInt8 convention).
+    ``\\N``; DateTime as ``YYYY-MM-DD hh:mm:ss`` in UTC (ClickHouse
+    DateTime carries no sub-second; tz-aware values, as Arrow timestamps
+    arrive, are converted, and naive ones are taken as UTC like the
+    native encoder does — so the table's DateTime columns must be UTC),
+    Date as ``YYYY-MM-DD``; bools as 1/0 (UInt8 convention).
     """
     if v is None:
         return "\\N"
     if isinstance(v, bool):
         return "1" if v else "0"
     if isinstance(v, _dt.datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone(_dt.timezone.utc)
         return v.strftime("%Y-%m-%d %H:%M:%S")
     if isinstance(v, _dt.date):
         return v.strftime("%Y-%m-%d")
@@ -190,13 +206,39 @@ def spark_to_clickhouse_type(spark_type: str) -> str:
     }.get(spark_type, "String")
 
 
+def _arrow_chunks(batches, columns: list[str], n: int):
+    """Re-slice one partition's record batches into tables of exactly
+    ``n`` rows (the last may be shorter) holding ``columns`` in order, so
+    an insert's size does not depend on how Spark cut the batches."""
+    import pyarrow as pa
+
+    buf, have = [], 0
+    for batch in batches:
+        batch = batch.select(columns)
+        lo = 0
+        while lo < batch.num_rows:
+            take = min(n - have, batch.num_rows - lo)
+            buf.append(batch.slice(lo, take))
+            have += take
+            lo += take
+            if have == n:
+                yield pa.Table.from_batches(buf).combine_chunks()
+                buf, have = [], 0
+    if have:
+        yield pa.Table.from_batches(buf).combine_chunks()
+
+
 @dataclass
 class ClickHouseSink:
     """``foreachBatch`` writer with named columns and retry-with-backoff.
 
-    ``client_factory`` is called once per executor-partition task (the
-    client is not serializable); inserts are chunked to ``insert_chunk``
-    rows so one giant micro-batch cannot create one giant INSERT.
+    Each micro-batch reaches the executors' Python workers as Arrow record
+    batches (``mapInArrow``).  ``client_factory`` is called once per
+    partition task (the client is not serializable); inserts are chunked
+    to ``insert_chunk`` rows so one giant micro-batch cannot create one
+    giant INSERT.  A client with ``insert_arrow(table, arrow_table)``
+    gets the Arrow chunk as is; any other gets ``insert(table, rows,
+    column_names)`` with ``rows`` a list of tuples in ``columns`` order.
     """
 
     table: str
@@ -207,23 +249,24 @@ class ClickHouseSink:
     insert_chunk: int = 10000
     settings: dict = field(default_factory=lambda: {"max_execution_time": 30})
 
-    def insert_partition(self, rows_iter) -> None:
+    def insert_partition(self, batches) -> None:
+        """Insert one partition, given as an iterator of
+        ``pyarrow.RecordBatch`` holding (at least) ``columns``."""
         client = self.client_factory()
         cols = list(self.columns)
-        buf: list[tuple] = []
-        for row in rows_iter:
-            buf.append(tuple(row[c] for c in cols))
-            if len(buf) >= self.insert_chunk:
-                self._insert_with_retry(client, buf)
-                buf = []
-        if buf:
-            self._insert_with_retry(client, buf)
+        insert_arrow = getattr(client, "insert_arrow", None)
+        for chunk in _arrow_chunks(batches, cols, self.insert_chunk):
+            if insert_arrow is not None:
+                self._retry(insert_arrow, self.table, chunk)
+            else:
+                rows = list(zip(*(c.to_pylist() for c in chunk.columns)))
+                self._retry(client.insert, self.table, rows, column_names=cols)
 
-    def _insert_with_retry(self, client, rows: list[tuple]) -> None:
+    def _retry(self, insert: Callable, *args, **kwargs) -> None:
         attempt = 0
         while True:
             try:
-                client.insert(self.table, rows, column_names=list(self.columns))
+                insert(*args, **kwargs)
                 return
             except Exception:
                 attempt += 1
@@ -236,8 +279,14 @@ class ClickHouseSink:
         callable directly with a batch DataFrame for batch mode)."""
         sink = self
 
+        def insert(batches):
+            sink.insert_partition(batches)
+            yield from ()
+
         def write(batch_df: DataFrame, batch_id: int = 0) -> None:
-            batch_df.select(*sink.columns).foreachPartition(sink.insert_partition)
+            # mapInArrow yields nothing; collect() is the action that runs
+            # the inserts
+            batch_df.select(*sink.columns).mapInArrow(insert, "_ int").collect()
 
         return write
 

@@ -2,15 +2,21 @@
 handshake + revision negotiation (modern and old servers), the INSERT
 flow (sample block -> typed data blocks -> empty terminator), column
 codec round-trips (fixed-width, String, Nullable, DateTime/Date),
-chunking, exception surfacing, ping/pong, and a Spark foreachPartition
-drive through ClickHouseSink — the same e2e pattern the HTTP client and
-kafkawire tests use (no real ClickHouse server exists in this env)."""
+chunking, exception surfacing, ping/pong, and a Spark ``mapInArrow``
+drive through ClickHouseSink over the caster's full type map — the same
+e2e pattern the HTTP client and kafkawire tests use (no real ClickHouse
+server exists in this env).  The encoder's byte-level properties live in
+test_chnative_encoder.py."""
 
 from __future__ import annotations
 
 import datetime
+import decimal
+import os
 import socket
 import struct
+import subprocess
+import sys
 import threading
 
 import pytest
@@ -50,7 +56,7 @@ from grower_spark.sinks.chnative import (
     write_string,
     write_varint,
 )
-from grower_spark.sinks.clickhouse import ClickHouseSink
+from grower_spark.sinks.clickhouse import ClickHouseSink, spark_to_clickhouse_type
 
 # module-level so Spark's pickled closures can reach the port; the server
 # itself lives only in the driver process (same pattern as the HTTP test)
@@ -474,25 +480,119 @@ def test_server_exception_keeps_connection():
         srv.close()
 
 
-def test_spark_foreach_partition_e2e(spark, native_server):
-    """The production shape: executor Python workers open native-TCP
-    connections to 127.0.0.1 and stream typed blocks through
-    ClickHouseSink — proving the client pickles (constructed per task
-    via client_factory) and the protocol survives multi-process use."""
-    df = spark.createDataFrame(
-        [(f"m{i}", i, i / 2.0) for i in range(20)],
-        "msg string, n long, score double",
-    ).repartition(4)
-    port = native_server.port
-    sink = ClickHouseSink(
-        table="logs.t",
-        columns=["msg", "n", "score"],
-        client_factory=lambda: NativeClickHouseClient("127.0.0.1", port),
-    )
-    sink.foreach_batch()(df)
-    flat = sorted(t for b in native_server.inserts
-                  for t in zip(*[vals for _, _, vals in b]))
-    assert flat == sorted((f"m{i}", i, i / 2.0) for i in range(20))
+# every spark_to_clickhouse_type pair, the caster's unsigned widenings,
+# FixedString and one Nullable column: (column, Spark type, ClickHouse type)
+_SPARK_TYPES = ["tinyint", "smallint", "int", "bigint", "decimal(20,0)",
+                "float", "double", "string", "date", "timestamp"]
+_E2E_COLUMNS = (
+    [(f"c_{t.split('(')[0]}", t, spark_to_clickhouse_type(t)) for t in _SPARK_TYPES]
+    + [("u8", "smallint", "UInt8"), ("u16", "int", "UInt16"),
+       ("u32", "bigint", "UInt32"), ("fixed", "string", "FixedString(6)"),
+       ("opt", "string", "Nullable(String)")]
+)
+_UTC = datetime.timezone.utc
+_F32_MAX = struct.unpack("<f", b"\xff\xff\x7f\x7f")[0]
+# rows at each type's lower bound, upper bound and in between; the
+# decimal(20,0) column carries UInt64's maximum, 2**64 - 1
+_E2E_ROWS = [
+    (-128, -32768, -2**31, -2**63, decimal.Decimal(0), -_F32_MAX, -1.5, "",
+     datetime.date(1970, 1, 1), datetime.datetime(1970, 1, 1, tzinfo=_UTC),
+     0, 0, 0, "", None),
+    (127, 32767, 2**31 - 1, 2**63 - 1, decimal.Decimal(2**64 - 1), 0.1, 1e300,
+     "wörld\t€", datetime.date(2149, 6, 6),
+     datetime.datetime(2106, 2, 7, 6, 28, 15, tzinfo=_UTC),
+     255, 65535, 2**32 - 1, "ab€", "x"),
+    (1, 2, 3, 4, decimal.Decimal(5), 3.25, 2.5, "y" * 200,
+     datetime.date(2024, 6, 1), datetime.datetime(2024, 6, 1, tzinfo=_UTC),
+     200, 404, 1234, "abcdef", None),
+]
+
+
+def _f32(x: float) -> float:
+    return struct.unpack("<f", struct.pack("<f", x))[0]
+
+
+def test_spark_foreach_partition_e2e(spark):
+    """The production shape: executor Python workers receive Arrow record
+    batches through ``mapInArrow``, open native-TCP connections to
+    127.0.0.1 and stream typed blocks through ClickHouseSink — over every
+    type the caster produces, with one partition left empty.  Proves the
+    client pickles (constructed per task via client_factory) and the
+    protocol survives multi-process use."""
+    srv = FakeNativeServer(table_types={c: ch for c, _, ch in _E2E_COLUMNS})
+    try:
+        schema = ", ".join(f"{c} {t}" for c, t, _ in _E2E_COLUMNS)
+        rdd = spark.sparkContext.parallelize(_E2E_ROWS, len(_E2E_ROWS) + 1)
+        df = spark.createDataFrame(rdd, schema)
+        assert 0 in df.rdd.glom().map(len).collect()  # an empty partition
+        port = srv.port
+        sink = ClickHouseSink(
+            table="logs.t",
+            columns=[c for c, _, _ in _E2E_COLUMNS],
+            client_factory=lambda: NativeClickHouseClient("127.0.0.1", port),
+        )
+        sink.foreach_batch()(df)
+        for block in srv.inserts:
+            assert [(n, t) for n, t, _ in block] == [(c, ch) for c, _, ch in _E2E_COLUMNS]
+        got = sorted((row for b in srv.inserts
+                      for row in zip(*[vals for _, _, vals in b])),
+                     key=lambda r: r[0])
+
+        def epoch(d: datetime.datetime) -> int:
+            return int(d.timestamp())
+
+        want = sorted(
+            ((r[0], r[1], r[2], r[3], int(r[4]), _f32(r[5]), r[6], r[7],
+              (r[8] - datetime.date(1970, 1, 1)).days, epoch(r[9]),
+              r[10], r[11], r[12], r[13], r[14]) for r in _E2E_ROWS),
+            key=lambda r: r[0])
+        assert got == want
+    finally:
+        srv.close()
+
+
+def test_datetime_not_shifted_by_worker_timezone():
+    """pyspark turns a Row's timestamp into a naive datetime in the
+    Python worker's LOCAL time; the sink's Arrow batches carry UTC
+    instants instead.  With TZ=Asia/Tokyo for the driver, the JVM and its
+    Python workers (the session time zone stays UTC), timestamp
+    '2024-06-01 00:00:00' must reach the native server as 1717200000 and
+    the HTTP client's TSV body as the same UTC wall time."""
+    from http.server import HTTPServer
+
+    from test_clickhouse_http import _RECEIVED, _Handler
+
+    srv = FakeNativeServer(table_types={"ts": "DateTime"})
+    http = HTTPServer(("127.0.0.1", 0), _Handler)
+    threading.Thread(target=http.serve_forever, daemon=True).start()
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from grower_spark.session import get_spark
+from grower_spark.sinks.chnative import NativeClickHouseClient
+from grower_spark.sinks.clickhouse import ClickHouseSink, HttpClickHouseClient
+
+spark = get_spark("tz-check", cpus=1)
+df = spark.sql("SELECT timestamp'2024-06-01 00:00:00' AS ts")
+ClickHouseSink("t", ["ts"], lambda: NativeClickHouseClient("127.0.0.1", {srv.port})
+               ).foreach_batch()(df)
+ClickHouseSink("t", ["ts"], lambda: HttpClickHouseClient("http://127.0.0.1:{http.server_port}")
+               ).foreach_batch()(df)
+spark.stop()
+"""
+    _RECEIVED.clear()
+    try:
+        proc = subprocess.run([sys.executable, "-c", script], timeout=300,
+                              env={**os.environ, "TZ": "Asia/Tokyo"},
+                              capture_output=True, text=True)
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        assert srv.inserts == [[("ts", "DateTime", [1717200000])]]
+        assert [r["body"] for r in _RECEIVED] == ["2024-06-01 00:00:00\n"]
+    finally:
+        srv.close()
+        http.shutdown()
+        _RECEIVED.clear()
 
 
 def test_fixed_string_oversize_raises():
@@ -500,14 +600,13 @@ def test_fixed_string_oversize_raises():
     inserts; silently truncating would store corrupted data.  The byte
     (not character) length is what counts — the caster truncates to N
     CHARACTERS, so multi-byte UTF-8 is exactly the sneaky case."""
-    from grower_spark.sinks.chnative import _encode_value
+    from grower_spark.sinks.chnative import encode_column
 
-    assert _encode_value("FixedString(3)", "ab") == b"ab\x00"
-    assert _encode_value("FixedString(3)", b"abc") == b"abc"
+    assert encode_column("FixedString(3)", ["ab", b"abc"]) == b"ab\x00abc"
     with pytest.raises(ProtocolError, match="too large"):
-        _encode_value("FixedString(3)", "abcd")
+        encode_column("FixedString(3)", ["abcd"])
     with pytest.raises(ProtocolError, match="too large"):
-        _encode_value("FixedString(3)", "ééé")  # 3 chars, 6 UTF-8 bytes
+        encode_column("FixedString(3)", ["ééé"])  # 3 chars, 6 UTF-8 bytes
 
 
 def test_midinsert_exception_surfaces_and_stops_sending():

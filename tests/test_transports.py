@@ -4,6 +4,7 @@ framing, dead-letter persistence."""
 
 import os
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
 
@@ -187,7 +188,10 @@ def test_clickhouse_sink_batches_and_retries(spark):
         insert_chunk=2,
     )
     rows = [{"remote_addr": f"1.1.1.{i}", "status": 200 + i, "extra": "x"} for i in range(5)]
-    sink.insert_partition(iter(rows))
+    # a partition arrives as Arrow record batches, cut wherever Spark cut
+    # them; the sink re-slices them into insert_chunk rows
+    sink.insert_partition(iter([pa.RecordBatch.from_pylist(rows[:3]),
+                                pa.RecordBatch.from_pylist(rows[3:])]))
     assert len(client.inserts) == 3  # chunks of 2,2,1
     table, first_chunk, cols = client.inserts[0]
     assert table == "db.access_log" and cols == ["remote_addr", "status"]
@@ -201,12 +205,12 @@ def test_clickhouse_sink_gives_up_after_retries():
         backoff_seconds=0.0, max_retries=2,
     )
     with pytest.raises(RuntimeError):
-        sink.insert_partition(iter([{"a": 1}]))
+        sink.insert_partition(iter([pa.RecordBatch.from_pylist([{"a": 1}])]))
 
 
 class FileBackedClient:
     """Executor-side fake: inserts append to files so the driver can
-    observe them (foreachPartition runs in worker processes)."""
+    observe them (the sink's mapInArrow runs in worker processes)."""
 
     def __init__(self, directory):
         self.directory = directory
